@@ -4,7 +4,7 @@
 
 Run from the repository root. The benchmark writes its input tables
 (``datagen``) into a scratch directory of its own, starts the engine's
-session exactly as ``session.get_spark(cpus=<usable cores>)`` builds it,
+session as ``session.get_spark(cpus=<half the usable cores>)`` builds it,
 and drives one workload (``workloads.py``) in a closed loop: each query,
 or each micro-batch, starts when the previous one finished.
 
@@ -15,7 +15,8 @@ A run has three parts:
    untimed passes); the results are then compared with the DuckDB
    oracle (``correctness.py``), outside the timed set-up;
 2. timed passes over the queries, in an order permuted by ``--seed``,
-   until ``--seconds`` have passed (a started pass always finishes);
+   until ``--seconds`` have passed and the workload's minimum number of
+   passes has run (a started pass always finishes);
 3. with ``--trace 1`` the timed passes run with spans, job tags, the
    Spark event log and layer probes for half of ``--seconds``; an
    untraced reference session then runs the other half, for the tracing
@@ -53,7 +54,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-from stats import median, valid_name, valid_unit  # noqa: E402
+from stats import (  # noqa: E402
+    geometric_mean_of_medians, median, sum_of_medians, valid_name, valid_unit)
 from workloads import WORKLOADS  # noqa: E402
 
 NOOP = "noop"
@@ -100,12 +102,42 @@ def git_sha() -> str | None:
 @dataclass
 class Passes:
     """What the timed passes measured: per-pass wall and CPU seconds,
-    (query, wall) per execution, data-carrying micro-batch reports."""
+    (query, wall) and (query, CPU) per execution, data-carrying
+    micro-batch reports and (query, triggerExecution ms) per batch."""
 
     walls: list[float] = field(default_factory=list)
     cpu: list[float] = field(default_factory=list)
     query_walls: list[tuple[str, float]] = field(default_factory=list)
+    query_cpu: list[tuple[str, float]] = field(default_factory=list)
     batches: list[dict] = field(default_factory=list)
+    query_batch_ms: list[tuple[str, float]] = field(default_factory=list)
+    # The JVM's cumulative JIT-compile ms, GC ms and loaded classes,
+    # before the first pass and after each pass.
+    jvm_counters: list[tuple[int, int, int]] = field(default_factory=list)
+
+    @property
+    def pass_s(self) -> float:
+        """A pass assembled from each query's median wall."""
+        return sum_of_medians(self.query_walls)
+
+    @property
+    def pass_cpu_s(self) -> float:
+        return sum_of_medians(self.query_cpu)
+
+    @property
+    def latency_ms(self) -> float:
+        """Typical wait of one unit of work: the geometric mean over
+        queries of each query's median micro-batch trigger time or, for
+        batch queries, median wall."""
+        if self.query_batch_ms:
+            return geometric_mean_of_medians(self.query_batch_ms)
+        return 1e3 * geometric_mean_of_medians(self.query_walls)
+
+    @property
+    def jit_s(self) -> float:
+        """Median JIT-compile seconds per pass (compiler threads' time)."""
+        c = self.jvm_counters
+        return median(b[0] - a[0] for a, b in zip(c, c[1:])) / 1e3
 
 
 def log(msg: str) -> None:
@@ -310,12 +342,17 @@ class Bench:
         finally:
             checker.close()
 
-    def timed_passes(self, seconds: float, tracer=None, tag: str = "p") -> Passes:
-        """Closed-loop passes until ``seconds`` elapse."""
+    def timed_passes(self, seconds: float, tracer=None, tag: str = "p",
+                     min_passes: int | None = None) -> Passes:
+        """Closed-loop passes until ``seconds`` elapse and at least
+        ``min_passes`` (by default the workload's minimum) have run."""
+        if min_passes is None:
+            min_passes = self.workload.min_passes
         rng = random.Random(self.args.seed)
         out = Passes()
+        out.jvm_counters.append(self.jvm_counters())
         t0 = time.perf_counter()
-        while not out.walls or time.perf_counter() - t0 < seconds:
+        while len(out.walls) < min_passes or time.perf_counter() - t0 < seconds:
             label = f"{tag}{len(out.walls)}"
             order = list(self.workload.queries)
             rng.shuffle(order)
@@ -327,10 +364,20 @@ class Bench:
                         wall += got[0]
                         cpu += got[1]
                         out.query_walls.append((name, got[0]))
+                        out.query_cpu.append((name, got[1]))
                         out.batches.extend(got[3])
+                        out.query_batch_ms.extend((name, ms) for ms in _trigger_ms(got[3]))
             out.walls.append(wall)
             out.cpu.append(cpu)
+            out.jvm_counters.append(self.jvm_counters())
         return out
+
+    def jvm_counters(self) -> tuple[int, int, int]:
+        """JIT-compile ms, GC ms and loaded classes of the JVM so far."""
+        mf = self.spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        gc_ms = sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())
+        return (int(mf.getCompilationMXBean().getTotalCompilationTime()), int(gc_ms),
+                int(mf.getClassLoadingMXBean().getTotalLoadedClassCount()))
 
     # ---------------------------------------------------------- runs
     def load_engine(self) -> None:
@@ -346,7 +393,7 @@ class Bench:
 
     def untraced(self, gen_s: float) -> dict:
         self.load_engine()
-        session_s = self.start_session(self.record["nproc"], trace=False)
+        session_s = self.start_session(self.record["spark_cpus"], trace=False)
         self.record["native_loaded"] = self.warm_native()
         results = self.warmup()
         setup_s = time.perf_counter() - T_PROCESS - gen_s
@@ -354,14 +401,10 @@ class Bench:
         passes = self.timed_passes(self.args.seconds)
         self.record.update(session_s=session_s, passes=asdict(passes),
                            peak_rss_mb=self.peak_rss())
-        # What a user waits for: a micro-batch, or a whole dashboard refresh.
-        unit_ms = (_trigger_ms(passes.batches) if self.workload.streaming
-                   else [w * 1e3 for w in passes.walls])
         return {
             "setup_s": (setup_s, "s"),
-            "pass_s": (median(passes.walls), "s"),
-            "pass_cpu_s": (median(passes.cpu), "s"),
-            "latency_ms_p50": (median(unit_ms), "ms"),
+            "pass_s": (passes.pass_s, "s"),
+            "latency_ms_p50": (passes.latency_ms, "ms"),
         }
 
     def peak_rss(self) -> float:
@@ -381,7 +424,7 @@ class Bench:
         seen_tables: set[str] = set()
         with tracer.span("run", workload=self.args.workload):
             with tracer.span("session_start"):
-                start_s = self.start_session(self.record["nproc"], trace=True)
+                start_s = self.start_session(self.record["spark_cpus"], trace=True)
             self.record["native_loaded"] = self.warm_native()
             with tracing.wrapped_load_table(tracer, seen_tables):
                 self.check(self.warmup(tracer))
@@ -391,7 +434,7 @@ class Bench:
             kernels = probes.kernel_probes(self.args.seed)
             rss = self.peak_rss()
         self.stop_session()
-        ref_walls = self.reference_pass_walls()
+        ref = self.reference_passes()
         local1_ms = self.local1_batch_ms() if self.workload.streaming else []
         jobs, stages = tracing.fold_event_log(tracing.read_event_log(self.event_log_dir))
         metrics, top_stages = layers.per_layer(
@@ -401,12 +444,14 @@ class Bench:
             "tables.scan_s": (scan_s, "s"),
             **{k: (v, "ms" if k.endswith("_ms") else "bool") for k, v in kernels.items()},
             "streaming.local1_batch_ms_p50": (median(local1_ms), "ms"),
-            "trace.pass_s": (median(passes.walls), "s"),
-            "trace.overhead_s": (median(passes.walls) - median(ref_walls), "s"),
+            "process.pass_cpu_s": (passes.pass_cpu_s, "s"),
+            "jvm.jit_s": (passes.jit_s, "s"),
+            "trace.pass_s": (passes.pass_s, "s"),
+            "trace.overhead_s": (passes.pass_s - ref.pass_s, "s"),
             "process.peak_rss_mb": (rss, "MB"),
         })
         self.record.update(
-            passes=asdict(passes), reference_pass_walls=ref_walls,
+            passes=asdict(passes), reference_passes=asdict(ref),
             tables_read=sorted(seen_tables), local1_batch_ms=local1_ms)
         _write_json(os.path.join(self.out, "spans.json"), tracer.dump())
         _write_json(os.path.join(self.out, "top_stages.json"), top_stages)
@@ -423,13 +468,13 @@ class Bench:
             total += time.perf_counter() - t0
         return total
 
-    def reference_pass_walls(self) -> list[float]:
+    def reference_passes(self) -> Passes:
         """Untraced session in the same process: warm-up, then timed
         passes; the baseline for the tracing overhead."""
-        self.start_session(self.record["nproc"], trace=False)
+        self.start_session(self.record["spark_cpus"], trace=False)
         try:
             self.warmup()
-            return self.timed_passes(self.args.seconds / 2, tag="r").walls
+            return self.timed_passes(self.args.seconds / 2, tag="r")
         finally:
             self.stop_session()
 
@@ -437,9 +482,16 @@ class Bench:
         """One pass of the streaming workload on a single core."""
         self.start_session(1, trace=False)
         try:
-            return _trigger_ms(self.timed_passes(0, tag="s").batches)
+            return _trigger_ms(self.timed_passes(0, tag="s", min_passes=1).batches)
         finally:
             self.stop_session()
+
+
+def spark_cpus(nproc: int) -> int:
+    """Task threads of the benchmark's session: half the usable cores,
+    so that the JVM's JIT and GC threads, Spark's Python workers and the
+    driver process run beside the tasks instead of queueing behind them."""
+    return max(1, nproc // 2)
 
 
 def _maybe(tracer, name: str, **attrs):
@@ -477,6 +529,7 @@ def main(argv=None) -> int:
 
     bench = Bench(args)
     bench.record["nproc"] = probes.host_cpus()
+    bench.record["spark_cpus"] = spark_cpus(bench.record["nproc"])
     try:
         gen_s = bench.prepare()
         metrics = bench.traced() if args.trace else bench.untraced(gen_s)

@@ -34,3 +34,31 @@ def percentile(values, q: float) -> float:
 
 def median(values) -> float:
     return percentile(values, 0.5)
+
+
+def medians_by_name(samples) -> dict[str, float]:
+    """Median of each name's values; ``samples`` holds (name, value)
+    pairs."""
+    by_name: dict[str, list[float]] = {}
+    for name, value in samples:
+        by_name.setdefault(name, []).append(value)
+    return {name: median(values) for name, values in by_name.items()}
+
+
+def sum_of_medians(samples) -> float:
+    """Sum over names of the median of each name's values: a pass
+    assembled from every query's median execution. ``samples`` holds
+    (name, value) pairs; one slow execution of a query moves it less
+    than it moves the wall of the pass it fell in."""
+    return sum(medians_by_name(samples).values())
+
+
+def geometric_mean_of_medians(samples) -> float:
+    """Geometric mean over names of each name's median: the typical
+    latency of a mix of queries whose medians differ several-fold,
+    without the jump a pooled median makes from one query's cluster of
+    values to the next."""
+    meds = [m for m in medians_by_name(samples).values() if m > 0]
+    if not meds:
+        return 0.0
+    return math.exp(sum(math.log(m) for m in meds) / len(meds))

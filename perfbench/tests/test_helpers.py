@@ -38,6 +38,21 @@ def test_metric_name_pattern(name, ok):
     assert stats.valid_name(name) is ok
 
 
+def test_sum_of_medians_takes_each_query_median():
+    samples = [("a", 1.0), ("b", 10.0), ("a", 3.0), ("b", 30.0), ("a", 2.0), ("b", 20.0)]
+    assert stats.medians_by_name(samples) == {"a": 2.0, "b": 20.0}
+    assert stats.sum_of_medians(samples) == 22.0
+    # One slow execution of a query does not move its median.
+    assert stats.sum_of_medians(samples + [("a", 99.0)]) == 22.0
+    assert stats.sum_of_medians([]) == 0
+
+
+def test_geometric_mean_of_medians():
+    samples = [("a", 1.0), ("a", 1.0), ("b", 4.0), ("b", 4.0)]
+    assert stats.geometric_mean_of_medians(samples) == pytest.approx(2.0)
+    assert stats.geometric_mean_of_medians([]) == 0.0
+
+
 def test_benchmark_json_follows_the_naming_rules():
     with open(os.path.join(os.path.dirname(PERFBENCH), "BENCHMARK.json"), encoding="utf-8") as f:
         spec = json.load(f)

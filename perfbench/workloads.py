@@ -18,9 +18,10 @@ class Workload:
     # each file is one data-carrying micro-batch. 0 for batch workloads.
     feed_files: int = 0
     # Untimed passes before timing. The first collects and checks the
-    # results; on dashboard_sql a second one lets JIT compilation finish
-    # (the first noop pass still spent ~40% more CPU than later ones).
+    # results; later ones let JIT compilation settle.
     warmup_passes: int = 1
+    # Timed passes a run makes at least, however short --seconds is.
+    min_passes: int = 1
 
     @property
     def streaming(self) -> bool:
@@ -38,8 +39,9 @@ WORKLOADS = {
                 "top_k_per_group",
                 "heavy_hitter_users",
             ),
-            sf=0.1,
+            sf=0.05,
             warmup_passes=2,
+            min_passes=2,
         ),
         Workload(
             "stream_microbatch",
@@ -50,7 +52,7 @@ WORKLOADS = {
                 "stream_jdbc_sink",
             ),
             sf=0.01,
-            feed_files=3,
+            feed_files=2,
         ),
     )
 }
