@@ -39,8 +39,8 @@ ran a uniform 1.19× slow).
 
 After the headline loop a LATENCY PASS re-runs the four
 latency-instrumented streaming queries over a ts-ordered multi-file
-feed (SPARK_GRAFT_STREAM_FEED_FILES, default 24 files → ≥20
-data-carrying micro-batches each) so stream_batch_ms p50/p95 are
+feed (LATENCY_FEED_FILES = 24 files → ≥20 data-carrying
+micro-batches each) so stream_batch_ms p50/p95 are
 order statistics rather than a single sample (round-6 verdict item
 2). The latency pass walls are recorded in the sidecar but excluded
 from "value" — throughput and latency stay separately comparable
@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -168,6 +169,10 @@ LATENCY_QUERIES = [
     "stream_stream_left_outer",
     "stream_fire_mask_stats",
 ]
+# Feed width of the latency pass: one data-carrying micro-batch per
+# file, so 24 files give each query >= 20 batches and p95 is an order
+# statistic rather than the max of a handful (round-6 verdict item 2).
+LATENCY_FEED_FILES = 24
 
 
 def _pctl(sorted_vals: list[float], q: float) -> float:
@@ -362,7 +367,6 @@ def main() -> None:
     # are feed-width-invariant (tests/test_streaming_multibatch.py);
     # the walls here are recorded in the sidecar but kept out of the
     # headline total so throughput stays comparable across rounds.
-    feed_files = int(os.environ.get("SPARK_GRAFT_LATENCY_FEED_FILES", "24"))
     stream_batch_ms: dict[str, dict[str, float]] = {}
     stream_batch_raw: list[float] = []
     latency_walls: dict[str, float] = {}
@@ -370,7 +374,7 @@ def main() -> None:
     # the finally block would silently delete it for everything after
     # the latency pass (round-8 advice).
     _prev_feed = os.environ.get("SPARK_GRAFT_STREAM_FEED_FILES")
-    os.environ["SPARK_GRAFT_STREAM_FEED_FILES"] = str(feed_files)
+    os.environ["SPARK_GRAFT_STREAM_FEED_FILES"] = str(LATENCY_FEED_FILES)
     try:
         for name in LATENCY_QUERIES:
             _streams.LAST_BATCH_MS.clear()
@@ -396,7 +400,7 @@ def main() -> None:
                     "max": round(ms[-1], 1),
                     "n_batches": len(ms),
                 }
-                print(f"# {name} batch ms ({feed_files}-file feed): "
+                print(f"# {name} batch ms ({LATENCY_FEED_FILES}-file feed): "
                       f"{stream_batch_ms[name]}", file=sys.stderr)
     finally:
         if _prev_feed is None:
@@ -503,11 +507,14 @@ def main() -> None:
         ),
         3,
     )
-    sf_txt = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf = float(sf_txt)
-    except ValueError:
-        sf = None
+    # The sf label names the per-run sidecar, so only a plain decimal
+    # from an sf<number> directory name is used; any other directory
+    # name is reported as sf null and files under "unknown".
+    sf_txt = os.path.basename(sf_dir.rstrip("/")).replace("sf", "", 1)
+    if re.fullmatch(r"\d+(?:\.\d+)?", sf_txt):
+        sf, sf_label = float(sf_txt), sf_txt
+    else:
+        sf, sf_label = None, "unknown"
     # Full detail → sidecar files + stderr above; the FINAL stdout line
     # stays compact so the driver's 2000-char tail capture always
     # parses it. Round 12: the detail ALSO lands at a per-run path
@@ -519,22 +526,22 @@ def main() -> None:
         "queries": timings,
         "rep_walls": rep_walls,
         "latency_pass_walls": latency_walls,
-        "latency_feed_files": feed_files,
+        "latency_feed_files": LATENCY_FEED_FILES,
         "stream_batch_ms": stream_batch_ms,
         "errors": errors,
     }
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_file = os.path.join(repo_dir, f"bench_detail_sf{sf_txt}_c{cpus}.json")
-    try:
-        with open(detail_file, "w", encoding="utf-8") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-        with open(
-            os.path.join(repo_dir, "bench_detail_last.json"), "w", encoding="utf-8"
-        ) as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-    except OSError as exc:
-        print(f"# sidecar write failed: {exc}", file=sys.stderr)
-        detail_file = None
+    detail_file = os.path.join(repo_dir, f"bench_detail_sf{sf_label}_c{cpus}.json")
+    # Each sidecar write succeeds or fails on its own: a failed
+    # bench_detail_last.json write still reports the per-run file.
+    for path in (detail_file, os.path.join(repo_dir, "bench_detail_last.json")):
+        try:
+            with open(path, "w", encoding="utf-8") as f:
+                json.dump(detail, f, indent=1, sort_keys=True)
+        except OSError as exc:
+            print(f"# sidecar write failed: {exc}", file=sys.stderr)
+            if path == detail_file:
+                detail_file = None
     print(f"# detail_file: {detail_file}", file=sys.stderr)
     print(f"# detail: {json.dumps(detail)}", file=sys.stderr)
     out = {

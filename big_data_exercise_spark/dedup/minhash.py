@@ -48,17 +48,13 @@ from pyspark.sql import DataFrame, functions as F
 from big_data_exercise_spark.functions.numeric import round_det_nn
 from big_data_exercise_spark.functions.text import tokens
 
-import os
-
 P = 8191
 # Max distinct-token-set rows the verify stage will force-broadcast
 # (one sorted int array per rep, ~200 B at the typical token budget →
 # a few hundred MB resident at the cap, same sizing rationale as the
-# closure's SPARK_GRAFT_BROADCAST_LABEL_ROWS). Past it, the verify
-# joins run as the stats-blind shuffle plan — correct at any scale.
-_BROADCAST_SET_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_SET_ROWS", "1000000")
-)
+# closure's cluster._BROADCAST_LABEL_ROWS). Past it, the verify joins
+# run as the stats-blind shuffle plan — correct at any scale.
+_BROADCAST_SET_ROWS = 1_000_000
 # Fixed universal-hash parameters (k=12). Public textbook construction:
 # h_j(x) = (A[j]*x + B[j]) mod P with odd A.
 A = (3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37, 41)

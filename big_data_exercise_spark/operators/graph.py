@@ -26,8 +26,8 @@ is one join + one aggregation keyed on node id — the same exchange
 every round, reusable under a pre-repartition. State is one row per
 node. In the distributed regime there is no driver-side collect: the
 node count enters the plan as a broadcast 1-row aggregate, not a
-Python scalar. Below a row-count gate (``SPARK_GRAFT_DRIVER_PR_EDGES``,
-default 1 M — the same knob shape as the closure's union-find gate)
+Python scalar. Below a row-count gate (``_DRIVER_PR_EDGES`` = 1 M
+symmetric edge rows — the same shape as the closure's union-find gate)
 the power iteration runs on the driver over one Arrow ``toPandas`` of
 the already-materialized symmetric edge list: at toy scale each
 distributed round costs ~3 scheduler jobs of pure overhead for a
@@ -35,12 +35,10 @@ graph whose whole edge list moves in well under a second, and the
 integer arithmetic makes the numpy replay EXACT (sums of non-negative
 int64 are order-independent; ``//`` == ``DIV`` on non-negatives), so
 the gate changes the wall, never the output — pinned by
-``test_pagerank_driver_gate_equivalence``.
+``test_pagerank_driver_loop_equivalence``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -50,8 +48,10 @@ SCALE = 10**12  # fixed-point: rank 1.0 ≙ SCALE
 # SYMMETRIC edge list). Same pattern as dedup/cluster.py's
 # _DRIVER_UF_EDGES: below it, iterating on the driver replaces
 # ~3 scheduler jobs per round; past it, the relational loop runs
-# unchanged (correct at any scale).
-_DRIVER_PR_EDGES = int(os.environ.get("SPARK_GRAFT_DRIVER_PR_EDGES", "1000000"))
+# unchanged (correct at any scale). Measured at sf0.1 (interleaved
+# A/B, OPTIMIZATION_r12.md): wall parity (~0.95-0.97x at 8 and 32
+# cores) and 5 fewer scheduler jobs per run, so the gate stays on.
+_DRIVER_PR_EDGES = 1_000_000
 
 
 def trade_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -123,14 +123,12 @@ def pagerank(
     edges: DataFrame,
     iters: int = 3,
     top: int = 20,
-    driver_gate: int | None = None,
 ) -> DataFrame:
     """Top-``top`` nodes by damped PageRank after ``iters`` power
     iterations. Output: (kind, entity_id, rank) ordered by rank desc
     with a total deterministic tie-break on the interleaved node id.
-    ``driver_gate`` overrides ``SPARK_GRAFT_DRIVER_PR_EDGES`` (edge
-    rows at or below it are solved on the driver; pass 0 to force the
-    distributed loop — the test hook)."""
+    Symmetric edge lists of at most ``_DRIVER_PR_EDGES`` rows are
+    solved on the driver; larger ones run the distributed loop."""
     flip = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     # bipartite + distinct input ⇒ the flipped set is disjoint (id
     # parity differs), so a plain union IS the symmetric closure.
@@ -140,7 +138,6 @@ def pagerank(
     # (job-count probe: 32 jobs at sf0.01 with eager rounds; the
     # unrolled lineage is bounded by the fixed iteration count).
     sym = edges.union(flip).localCheckpoint(eager=False)
-    gate = _DRIVER_PR_EDGES if driver_gate is None else driver_gate
     # Gate probe: a FULL count, deliberately (round-12 advice item
     # considered and measured): the count's job is what materializes
     # the lazy checkpoint blocks that the driver transfer — or the
@@ -150,7 +147,7 @@ def pagerank(
     # gathers the first million rows into one task) and, worse, it
     # materializes only the partitions the limit touched — the
     # toPandas then re-runs the orders⋈lineitem lineage for the rest.
-    if gate > 0 and sym.count() <= gate:
+    if sym.count() <= _DRIVER_PR_EDGES:
         res = _driver_pagerank(sym, iters, top)
         if res is not None:
             return res  # None → negative node ids → relational loop

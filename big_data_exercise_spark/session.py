@@ -119,7 +119,7 @@ def bound_reader_batch(spark: SparkSession, sf_dir: str) -> int:
     execution): on a giant-doc dir other tables in the same session
     read with the same smaller batch — survival margin over scan
     micro-efficiency, which is the right trade exactly where this
-    engages. ``SPARK_GRAFT_READER_BATCH`` overrides (0 = leave alone).
+    engages.
     """
     def _restore_default() -> int:
         # Reset the session-global conf on every path that decides the
@@ -131,13 +131,6 @@ def bound_reader_batch(spark: SparkSession, sf_dir: str) -> int:
         spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
         return READER_BATCH_DEFAULT
 
-    env = os.environ.get("SPARK_GRAFT_READER_BATCH")
-    if env is not None:
-        rows = int(env)
-        if rows > 0:
-            spark.conf.set(READER_BATCH_KEY, str(rows))
-            return rows
-        return READER_BATCH_DEFAULT  # 0 = explicit leave-alone
     path = os.path.join(sf_dir, "documents.parquet")
     if not os.path.isfile(path):
         return _restore_default()

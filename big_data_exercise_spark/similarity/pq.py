@@ -105,7 +105,7 @@ def pq_codebooks(
     ``iters`` integer Lloyd rounds. Seeds: the k smallest vids seed
     every sub-space (cid = seed rank — deterministic, no RNG).
     ``assign_fn(cents) -> (vid, sub, cid, ...)`` overrides the
-    relational assignment step — the production path passes the
+    relational assignment step — :func:`pq_topk` passes the
     bit-identical Arrow kernel (:func:`_codes_arrow`) so training
     avoids the kcent× join fan-out; the centroid-update aggregate is
     shared either way."""
@@ -156,11 +156,10 @@ def _codes_arrow(embeddings: DataFrame, cents: DataFrame, m: int, n_dims: int) -
     Bit-identical to ``_assign`` on ANY corpus, ragged rows included
     (round-12, advice item): per sub-space the distance is summed over
     the INTERSECTION of the vector's dims and the centroid's dims —
-    exactly what the relational join on ``dim`` computes — via the
-    same presence-mask form as ``kmeans._assign_arrow``
-    (dist = (X·X)@P.T − 2·X@C.T + M@(C·C).T, every intermediate an
-    exact integer < 2⁵³ in float64), with ties broken to the lowest
-    cid (argmin first-hit over cid-ascending codebooks ==
+    exactly what the relational join on ``dim`` computes — via
+    presence masks (dist = (X·X)@P.T − 2·X@C.T + M@(C·C).T, every
+    intermediate an exact integer < 2⁵³ in float64), with ties broken
+    to the lowest cid (argmin first-hit over cid-ascending codebooks ==
     struct-min(dist, cid)). A (vid, sub) whose dims overlap no
     centroid of that sub-space yields no code row, and a NULL
     embedding yields nothing at all — matching posexplode + join.
@@ -242,7 +241,6 @@ def pq_topk(
     rerank: int = RERANK,
     train_mod: int = 1,
     train_cap: int | None = None,
-    arrow_encode: bool = False,
 ) -> DataFrame:
     """Top-``k`` per query (the ``n_queries`` smallest vec_ids) via
     PQ-ADC shortlist + exact re-rank. Output: (query_id, vec_id,
@@ -265,35 +263,26 @@ def pq_topk(
         n = embeddings.count()
         train_mod = -(-n // train_cap)  # ceil: sample ≈ n/train_mod ≤ cap
     train = lf.filter(F.col("vid") % train_mod == 0) if train_mod > 1 else lf
-    if arrow_encode:
-        # Same kernel for the training assignment (proven bit-identical
-        # to _assign): the Lloyd round otherwise pays the same kcent×
-        # join fan-out as the encode, on the training slice.
-        train_emb = (
-            embeddings.filter(F.col("vec_id") % train_mod == 0)
-            if train_mod > 1
-            else embeddings
-        )
-        cents = pq_codebooks(
-            train,
-            kcent,
-            iters,
-            assign_fn=lambda c: _codes_arrow(train_emb, c, m, n_dims),
-        )
-    else:
-        cents = pq_codebooks(train, kcent, iters)
-    # Encode: the one stage that touches every corpus vector at full
-    # codebook width. arrow_encode swaps the kcent×-fan-out relational
-    # join for the broadcast-codebook numpy kernel (bit-identical,
-    # property-tested). Both registry queries pass arrow_encode=True
-    # since round 11 (toy config: 5.9 → 3.8 s at sf0.1); the
-    # relational form remains as the oracle's definition — pq_sql()
-    # unrolls IT, so the hash check compares two independent
-    # algorithms — and as the property-test anchor.
-    if arrow_encode:
-        codes = _codes_arrow(embeddings, cents, m, n_dims)
-    else:
-        codes = _assign(lf, cents).select("vid", "sub", "cid")
+    # Training and encode both assign with the broadcast-codebook
+    # numpy kernel (bit-identical to the relational _assign,
+    # property-tested) instead of the kcent×-fan-out join. Measured at
+    # sf0.1 (interleaved A/B, OPTIMIZATION_r12.md): 1.11×/1.22× on the
+    # toy config and 1.33×/1.81× on the production config at 32/8
+    # cores. The relational form remains the oracle's definition —
+    # pq_sql() unrolls IT, so the hash check compares two independent
+    # algorithms — and the property-test anchor.
+    train_emb = (
+        embeddings.filter(F.col("vec_id") % train_mod == 0)
+        if train_mod > 1
+        else embeddings
+    )
+    cents = pq_codebooks(
+        train,
+        kcent,
+        iters,
+        assign_fn=lambda c: _codes_arrow(train_emb, c, m, n_dims),
+    )
+    codes = _codes_arrow(embeddings, cents, m, n_dims)
 
     qlf = lf.filter(F.col("vid") < n_queries).select(
         F.col("vid").alias("qid"), "sub", "dim", F.col("q").alias("qq")
@@ -400,7 +389,6 @@ def pq_topk_prod(
         rerank=RERANK_PROD,
         train_mod=train_mod,
         train_cap=train_cap,
-        arrow_encode=True,
     )
 
 

@@ -543,16 +543,10 @@ def _note_source_bytes(path: str) -> None:
         _LAST_SOURCE_BYTES["bytes"] = None
 
 
-def _resolve_state_partitions(spark: SparkSession, requested: int | None) -> int:
-    """State-store instance count for one streaming query start:
-    explicit caller value > ``SPARK_GRAFT_STATE_PARTITIONS`` env >
-    source-volume derivation (min 2, max the batch shuffle width) >
-    the historical fixed 8."""
-    if requested is not None:
-        return requested
-    env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+def _resolve_state_partitions(spark: SparkSession) -> int:
+    """State-store instance count for one streaming query start: the
+    source-volume derivation (min 2, max the batch shuffle width), or
+    the historical fixed 8 when no source recorded its bytes."""
     try:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # noqa: BLE001 — conf may be 'auto' on some builds
@@ -563,11 +557,7 @@ def _resolve_state_partitions(spark: SparkSession, requested: int | None) -> int
     return max(2, min(width, -(-nbytes // _STATE_BYTES_PER_INSTANCE)))
 
 
-def run_to_memory(
-    result: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
+def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming plan to completion (availableNow semantics
     via processAllAvailable) into a memory sink; return the final
     table as a batch DataFrame.
@@ -588,7 +578,7 @@ def run_to_memory(
     prog_key = "spark.sql.streaming.numRecentProgressUpdates"
     saved_prog = spark.conf.get(prog_key, None)
     spark.conf.set(prog_key, "100000")
-    with _state_partitions(spark, _resolve_state_partitions(spark, state_partitions)):
+    with _state_partitions(spark, _resolve_state_partitions(spark)):
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -637,7 +627,7 @@ def run_foreach_batch_to_jdbc(
 
     with _state_partitions(
         result.sparkSession,
-        _resolve_state_partitions(result.sparkSession, None),
+        _resolve_state_partitions(result.sparkSession),
     ):
         q = (
             result.writeStream.foreachBatch(write_batch)
@@ -736,7 +726,7 @@ def run_foreach_batch_to_parquet(
 
     with _state_partitions(
         result.sparkSession,
-        _resolve_state_partitions(result.sparkSession, None),
+        _resolve_state_partitions(result.sparkSession),
     ):
         q = (
             result.writeStream.foreachBatch(write_batch)

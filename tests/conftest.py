@@ -28,9 +28,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # sf0.001, plan-property pins, codec/equivalence pins) and SKIPS the
 # exploration lanes marked `slow` (randomized fuzz campaigns, streaming
 # soak/feed-width invariance sweeps, the multi-executor local-cluster
-# topology replay). SPARK_GRAFT_FULL_TESTS=1 restores everything — the
-# repo's own exit gates run that full lane and record it in
-# OPTIMIZATION_r12.md.
+# topology replay). SPARK_GRAFT_FULL_TESTS=1 restores everything — every
+# change that touches an engine path runs that full lane and records its
+# passed/failed/skipped line in CHANGES.md.
 _FULL = os.environ.get("SPARK_GRAFT_FULL_TESTS", "0") not in ("", "0")
 
 

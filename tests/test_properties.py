@@ -577,7 +577,7 @@ def test_pq_prod_recall_and_exact_rerank(spark):
     assert np.mean(recs) >= 0.9, recs
 
 
-def test_pq_arrow_encode_bit_identical_and_cap_wiring(spark):
+def test_pq_codes_arrow_bit_identical_and_cap_wiring(spark):
     """The production PQ path encodes (and train-assigns) with the
     broadcast-codebook Arrow kernel instead of the kcent×-fan-out
     relational join (measured 236 s → seconds for the 200k-vector
@@ -1028,45 +1028,25 @@ def test_chunking_covers_every_token_with_overlap(spark):
     assert rows[0]["chunk_fp"] != rows[1]["chunk_fp"]
 
 
-def test_kmeans_arrow_assign_bit_identical(spark):
-    """Round-11: the numpy assignment kernel (registry path) and the
-    relational broadcast-join form must emit identical (vec_id,
-    cluster, dist) triples — integer-exact, not approximately equal —
-    across the full Lloyd loop, so drift cannot compound through the
-    centroid updates."""
+def test_kmeans_dirty_rows_relational(spark):
+    """Dirty rows through the relational assignment: a RAGGED vector is
+    assigned via the partial-dim distance over its own dims (the join
+    on ``dim`` simply has fewer terms), and a whole-NULL embedding
+    drops (posexplode of NULL yields nothing)."""
     from big_data_exercise_spark.similarity.kmeans import kmeans_assignments
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    rel = {
-        tuple(r)
-        for r in kmeans_assignments(emb, k=8, iters=2, arrow_assign=False).collect()
-    }
-    arr = {
-        tuple(r)
-        for r in kmeans_assignments(emb, k=8, iters=2, arrow_assign=True).collect()
-    }
-    assert rel == arr and len(rel) > 0
-
-    # round-12 (advice item): RAGGED and NULL rows too — the kernel
-    # assigns a short vector via the partial-dim distance exactly like
-    # the relational join (the old kernel silently dropped it)
     dirty = emb.limit(12).unionByName(
         spark.createDataFrame(
             [(90001, None, 0), (90002, [0.25] * 63, 0), (90003, [0.5] * 7, 0)],
             emb.schema,
         )
     )
-    rel_d = {
-        tuple(r)
-        for r in kmeans_assignments(dirty, k=4, iters=2, arrow_assign=False).collect()
-    }
-    arr_d = {
-        tuple(r)
-        for r in kmeans_assignments(dirty, k=4, iters=2, arrow_assign=True).collect()
-    }
-    assert rel_d == arr_d and len(rel_d) > 0
-    ids = {t[0] for t in arr_d}
+    rows = kmeans_assignments(dirty, k=4, iters=2).collect()
+    ids = [r["vec_id"] for r in rows]
+    assert len(ids) == len(set(ids)) == 14
     assert 90002 in ids and 90003 in ids and 90001 not in ids
+    assert all(0 <= r["cluster"] < 4 and r["dist"] >= 0 for r in rows)
 
 
 def test_kmeans_partitions_all_vectors_and_improves(spark):
@@ -1953,9 +1933,57 @@ def test_connected_components_uf_gate_equivalence(spark, monkeypatch):
         assert cid <= node
 
 
-def test_pagerank_driver_gate_equivalence(spark):
+def test_dedup_broadcast_caps_both_sides(spark, monkeypatch):
+    """The two dedup broadcast caps change the plan, never the rows:
+    with every cap forced to -1 the verify and closure joins run as
+    shuffle joins and must return what the broadcast plans return.
+    The driver union-find gate is forced too — below it the closure
+    never reaches the label joins that _BROADCAST_LABEL_ROWS gates."""
+    from big_data_exercise_spark.dedup import cluster, minhash
+    from big_data_exercise_spark.plans.registry import all_queries
+
+    specs = all_queries()
+    names = ("minhash_near_duplicates", "dedup_cluster_assignment")
+
+    def rows(name):
+        return sorted(tuple(r) for r in specs[name].build(spark, SF_DIR).collect())
+
+    default = {n: rows(n) for n in names}
+    monkeypatch.setattr(minhash, "_BROADCAST_SET_ROWS", -1)
+    monkeypatch.setattr(cluster, "_BROADCAST_LABEL_ROWS", -1)
+    monkeypatch.setattr(cluster, "_DRIVER_UF_EDGES", -1)
+    for n in names:
+        assert default[n] and rows(n) == default[n], n
+
+
+def test_resolve_state_partitions_branches(spark, monkeypatch):
+    """State-store count per stream start: no source hint keeps the
+    historical min(8, width); the sf0.001 events file (far below one
+    32 MB instance) gets the floor of 2; a hint past width × 32 MB is
+    clamped to the batch shuffle width."""
+    import os
+
+    from big_data_exercise_spark.streaming import pipelines as streams
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        for width in (4, 32):
+            spark.conf.set(key, str(width))
+            monkeypatch.setitem(streams._LAST_SOURCE_BYTES, "bytes", None)
+            assert streams._resolve_state_partitions(spark) == min(8, width)
+            streams._note_source_bytes(os.path.join(SF_DIR, "events.parquet"))
+            assert streams._resolve_state_partitions(spark) == 2
+            big = width * streams._STATE_BYTES_PER_INSTANCE + 1
+            monkeypatch.setitem(streams._LAST_SOURCE_BYTES, "bytes", big)
+            assert streams._resolve_state_partitions(spark) == width
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_pagerank_driver_loop_equivalence(spark, monkeypatch):
     """Round-11: the driver numpy power iteration (edge count under
-    ``SPARK_GRAFT_DRIVER_PR_EDGES``) and the relational loop must emit
+    ``graph._DRIVER_PR_EDGES``) and the relational loop must emit
     identical rows — the arithmetic is all non-negative int64, so the
     replay is exact, not approximately equal. Graph mixes a hub, a
     ring, and leaf nodes so degrees and inflows differ per node."""
@@ -1965,16 +1993,14 @@ def test_pagerank_driver_gate_equivalence(spark):
     edges_py += [(2 * c, 2 * 5 + 1) for c in range(1, 6)]  # extra fan-in
     edges = spark.createDataFrame(edges_py, "u long, v long").distinct()
     fast = [tuple(r) for r in graph.pagerank(edges, iters=3, top=25).collect()]
-    slow = [
-        tuple(r)
-        for r in graph.pagerank(edges, iters=3, top=25, driver_gate=0).collect()
-    ]
+    monkeypatch.setattr(graph, "_DRIVER_PR_EDGES", -1)  # force the loop
+    slow = [tuple(r) for r in graph.pagerank(edges, iters=3, top=25).collect()]
     assert fast == slow
     ranks = [r[2] for r in fast]
     assert ranks == sorted(ranks, reverse=True)
 
 
-def test_pagerank_negative_ids_fall_back_to_relational(spark):
+def test_pagerank_negative_ids_fall_back_to_relational(spark, monkeypatch):
     """Round-12 (advice item): the driver numpy replay uses Python
     ``//``/``%`` where the relational loop uses Spark's truncating DIV
     and sign-preserving ``%`` — they diverge on NEGATIVE node ids, so
@@ -1986,10 +2012,8 @@ def test_pagerank_negative_ids_fall_back_to_relational(spark):
     edges_py = [(-2, 3), (-4, 3), (-2, 5), (6, 5)]
     edges = spark.createDataFrame(edges_py, "u long, v long")
     gated = [tuple(r) for r in graph.pagerank(edges, iters=2, top=10).collect()]
-    forced = [
-        tuple(r)
-        for r in graph.pagerank(edges, iters=2, top=10, driver_gate=0).collect()
-    ]
+    monkeypatch.setattr(graph, "_DRIVER_PR_EDGES", -1)  # force the loop
+    forced = [tuple(r) for r in graph.pagerank(edges, iters=2, top=10).collect()]
     assert gated == forced and len(gated) > 0
     # the divergent projection really is exercised: negative ids map
     # through Spark semantics (-2 % 2 == 0 → customer, -2 DIV 2 == -1)

@@ -6,8 +6,7 @@ batch × N concurrent tasks was the round-9 spill probe's only OOM at
 a 1.5 GiB heap. session.bound_reader_batch keys the batch ROW count
 off the documents footer (n_chars max statistic) so giant corpora get
 a byte-bounded batch while normal corpora keep the 4096 default —
-these lanes pin the keying logic on both corpus classes plus the env
-override.
+these lanes pin the keying logic on both corpus classes.
 """
 from __future__ import annotations
 
@@ -70,18 +69,6 @@ def test_load_table_engages_bound(spark):
     assert int(spark.conf.get(READER_BATCH_KEY)) < READER_BATCH_DEFAULT
     # the bounded read still returns every row
     assert df.count() == 2
-    spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
-
-
-def test_env_override(spark, monkeypatch):
-    spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
-    d = _giant_dir(10_000_000)
-    monkeypatch.setenv("SPARK_GRAFT_READER_BATCH", "0")
-    assert bound_reader_batch(spark, d) == READER_BATCH_DEFAULT
-    assert spark.conf.get(READER_BATCH_KEY) == str(READER_BATCH_DEFAULT)
-    monkeypatch.setenv("SPARK_GRAFT_READER_BATCH", "512")
-    assert bound_reader_batch(spark, d) == 512
-    assert spark.conf.get(READER_BATCH_KEY) == "512"
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
 
 

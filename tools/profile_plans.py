@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Round-11 profiling harness: time declared queries through the noop
-sink (bench methodology: best-of-N, per-query cache isolation) and dump
-`.explain("formatted")` to plans/r12/<name>_<tag>.txt.
+"""Profiling harness: time declared queries through the noop sink
+(bench methodology: best-of-N, per-query cache isolation) and dump
+`.explain("formatted")` to plans/<subdir>/<name>_<tag>.txt.
 
 Usage:
-    python tools/profile_r12.py --tag before q1 q2 ...
-    python tools/profile_r12.py --tag before --reps 3 --explain-only q1
+    python tools/profile_plans.py r12 --tag before q1 q2 ...
+    python tools/profile_plans.py r12 --tag before --reps 3 --explain-only q1
 
 Keeps the bench's conf (local[$SPARK_GRAFT_CPUS], shuffle=cpus,
 1 MB maxPartitionBytes) so walls here are comparable to bench walls.
@@ -27,6 +27,7 @@ from big_data_exercise_spark.session import get_spark
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("subdir", help="output subdirectory of plans/, e.g. r12")
     ap.add_argument("names", nargs="+")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=3)
@@ -37,11 +38,11 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("r12-profile", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("profile-plans", cpus=cpus, shuffle_partitions=cpus)
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
     specs = all_queries()
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r12")
+        os.path.abspath(__file__))), "plans", args.subdir)
     os.makedirs(out_dir, exist_ok=True)
 
     results: dict[str, list[float]] = {}
@@ -62,7 +63,7 @@ def main() -> None:
         for _ in range(args.reps):
             t0 = time.perf_counter()
             df = spec.build(spark, args.sf_dir)
-            spark.sparkContext.setJobDescription(f"r12:{name}")
+            spark.sparkContext.setJobDescription(f"{args.subdir}:{name}")
             df.write.format("noop").mode("overwrite").save()
             spark.sparkContext.setJobDescription(None)
             walls.append(round(time.perf_counter() - t0, 3))
